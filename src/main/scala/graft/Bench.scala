@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
@@ -39,63 +39,7 @@ object Bench {
       try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
-    def unloadState(): Unit =
-      // Unload streaming state-store providers + maintenance thread between
-      // queries: accumulated state from earlier streaming gates otherwise
-      // inflates every later query's number as the suite grows (r9: 347
-      // common queries 259s -> 355s, entirely in-suite). Providers reload
-      // lazily, so this is safe for whatever runs next.
-      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      catch { case _: Throwable => () }
-    // ALL samples per query are retained and published (r12 verdict task
-    // 5: single best-of-N numbers at a ~0.5 s floor made 1–2 s deltas
-    // unadjudicable — the spread column is what lets a reader separate a
-    // regression from machine noise).
-    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    def record(name: String, t: Double): Unit =
-      samples(name) = samples.getOrElse(name, Vector.empty) :+ t
-    val firstPass = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // best of 2 runs: a single run's number is dominated by whichever GC /
-      // JIT pause lands on it; the min measures the plan, not the noise.
-      // noop sink forces full evaluation of every column (count() would let
-      // Spark prune the projections away).
-      val times = (1 to 2).map(_ => timeOne(name, fn))
-      // Outlier re-run: when the two runs disagree hard AND the query isn't
-      // trivially fast, a GC/contention wave likely hit both measurements
-      // differently — one more sample stops a phantom regression from
-      // becoming the round's headline (r9: q_scorer_agreement 44.3s driver
-      // vs 1.85s quiet).
-      val all = if (times.max / times.min.max(1e-9) > 3.0 && times.min > 1.0)
-        times :+ timeOne(name, fn) else times
-      all.foreach(record(name, _))
-      unloadState()
-      name -> all.min
-    }
-    // SUITE-END RE-MEASURE (r10 verdict task 4): under SUSTAINED machine
-    // contention BOTH first-pass samples inflate together, so the >3x
-    // disagreement trigger above never fires (r10: q_xml_roundtrip billed
-    // 200s driver vs 2.8s quiet — 72x). By suite end the external wave has
-    // usually passed, so every query whose best-of-2 exceeds 3x its
-    // committed prior — plus the slowest 12 outright — gets one more
-    // isolated sample; the final number is the min over all samples.
-    val suspects = firstPass.filter { case (k, v) =>
-      v > 1.0 && priors.get(k).exists(p => v > 3.0 * p.max(0.2))
-    }.map(_._1).toSet ++
-      firstPass.filter(_._2 > 2.0).sortBy(-_._2).take(12).map(_._1)
-    val results = firstPass.map { case (name, v) =>
-      if (suspects(name)) {
-        val r = timeOne(name, queries(name))
-        record(name, r)
-        unloadState()
-        name -> math.min(v, r)
-      } else name -> v
-    }
+    val Timings(results, samples, failed) = measure(spark, queries, sfDir, priors)
     val total = results.map(_._2).sum
     // Full per-query fidelity goes to a FILE: the driver keeps only the last
     // ~2000 chars of stdout, and the full dict outgrew that at 87 queries
@@ -115,8 +59,9 @@ object Bench {
     // a reader of any BENCH_rNN never mistakes the step for a plan change.
     val rescoped =
       """{"q_pca":"r13: 8-dim k=3 fixed-schedule replay fit (was 64-dim k=8 pcaFit)","q_pca_ann":"r14: pinned 8-dim rotation + BIGINT recall audit (was 64-dim adaptive fit)","q_ann_ivf":"r13: formula-pinned centroids (was KMeans fit)","q_compression_ratio":"r13: doc_id < 24 zlib pins (was full corpus)"}"""
+    val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"rescoped":$rescoped,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"failed":$failedNames,"rescoped":$rescoped,"sf":"$sfDir"}"""
     // A FILTERED run (SPARK_GRAFT_BENCH_ONLY) must not clobber the
     // committed full-suite file: its totals would poison the priors and
     // the round record. Write a side file instead.
@@ -124,12 +69,13 @@ object Bench {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    // Compact final line: exact total over ALL queries, plus as many of the
-    // SLOWEST queries as fit a fixed budget well inside the tail window
-    // (the slow set is what perf grading needs; the rest is in the file).
+    // Compact final line: exact total over every query that did not throw,
+    // the count of those that did, plus as many of the SLOWEST queries as
+    // fit a fixed budget well inside the tail window (the slow set is what
+    // perf grading needs; the rest is in the file).
     val budget = 1600
     val header =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"full":"$fullPath","queries":"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":${failed.size},"full":"$fullPath","queries":"""
     val footer = s""","sf":"$sfDir"}"""
     var used = header.length + footer.length + 2 // braces of the dict
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -150,5 +96,89 @@ object Bench {
     spark.stop()
     println(header + compactQs + footer)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Per-query timings of one suite pass. `results` holds each query that
+    * never threw with its best time; a query that threw in any sample is in
+    * `failed` instead and is neither timed nor summed. */
+  final case class Timings(
+      results: Seq[(String, Double)],
+      samples: Map[String, Vector[Double]],
+      failed: Seq[String])
+
+  def measure(
+      spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String,
+      priors: Map[String, Double]): Timings = {
+    val failed = scala.collection.mutable.Set.empty[String]
+    // None when the query threw: its elapsed time measures the crash, not the plan
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
+    }
+    def unloadState(): Unit =
+      // Unload streaming state-store providers + maintenance thread between
+      // queries: accumulated state from earlier streaming gates otherwise
+      // inflates every later query's number as the suite grows (r9: 347
+      // common queries 259s -> 355s, entirely in-suite). Providers reload
+      // lazily, so this is safe for whatever runs next.
+      try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      catch { case _: Throwable => () }
+    // ALL samples per query are retained and published (r12 verdict task
+    // 5: single best-of-N numbers at a ~0.5 s floor made 1–2 s deltas
+    // unadjudicable — the spread column is what lets a reader separate a
+    // regression from machine noise).
+    val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    def record(name: String, t: Double): Unit =
+      samples(name) = samples.getOrElse(name, Vector.empty) :+ t
+    val firstPass = queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      // best of 2 runs: a single run's number is dominated by whichever GC /
+      // JIT pause lands on it; the min measures the plan, not the noise.
+      // noop sink forces full evaluation of every column (count() would let
+      // Spark prune the projections away).
+      val times = (1 to 2).flatMap(_ => timeOne(name, fn))
+      // Outlier re-run: when the two runs disagree hard AND the query isn't
+      // trivially fast, a GC/contention wave likely hit both measurements
+      // differently — one more sample stops a phantom regression from
+      // becoming the round's headline (r9: q_scorer_agreement 44.3s contended
+      // vs 1.85s quiet).
+      val all = if (times.size == 2 && times.max / times.min.max(1e-9) > 3.0 && times.min > 1.0)
+        times ++ timeOne(name, fn) else times
+      unloadState()
+      if (failed(name)) None
+      else {
+        all.foreach(record(name, _))
+        Some(name -> all.min)
+      }
+    }
+    // SUITE-END RE-MEASURE (r10 verdict task 4): under SUSTAINED machine
+    // contention BOTH first-pass samples inflate together, so the >3x
+    // disagreement trigger above never fires (r10: q_xml_roundtrip billed
+    // 200s contended vs 2.8s quiet — 72x). By suite end the external wave has
+    // usually passed, so every query whose best-of-2 exceeds 3x its
+    // committed prior — plus the slowest 12 outright — gets one more
+    // isolated sample; the final number is the min over all samples.
+    val suspects = firstPass.filter { case (k, v) =>
+      v > 1.0 && priors.get(k).exists(p => v > 3.0 * p.max(0.2))
+    }.map(_._1).toSet ++
+      firstPass.filter(_._2 > 2.0).sortBy(-_._2).take(12).map(_._1)
+    val results = firstPass.flatMap { case (name, v) =>
+      if (suspects(name)) {
+        val r = timeOne(name, queries(name))
+        r.foreach(record(name, _))
+        unloadState()
+        r.map(t => name -> math.min(v, t))
+      } else Some(name -> v)
+    }
+    Timings(results, samples.toMap -- failed, failed.toSeq.sorted)
   }
 }

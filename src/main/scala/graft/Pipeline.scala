@@ -19,7 +19,11 @@ import graft.sources.Tables
   *  1. ingest two heterogeneous "sources" + diagonal union
   *     (extract_*_data.py; pipeline.py:326) — union-then-enrich, so the
   *     dimension joins run once over the combined stream
-  *  2. dimension enrich via broadcast joins          (utils.py:349)
+  *  2. dimension enrich via broadcast joins          (utils.py:349) —
+  *     dimension attributes (the normalized region/nation names) are
+  *     derived on the dimension side, before the broadcast, so the text
+  *     kernel runs once per dimension row; derived above the joins it
+  *     would run once per fact row, for the same few dozen strings
   *  3. indicator key synthesis + period tagging      (extract_ist_data.py:95)
   *  4. conditional (null-preserving) aggregation     (extract_pec_data.py:141)
   *  5. pivot to the wide report                      (extract_pec_data.py:260)
@@ -43,7 +47,8 @@ object Pipeline {
     val unioned = Relational.diagonalConcat(Seq(srcA, srcB))
 
     // 2. enrich: order context, then customer -> nation -> region (dims
-    //    broadcast, facts never shuffle for the dim joins)
+    //    broadcast, facts never shuffle for the dim joins); the names are
+    //    normalized before the broadcast, once per dimension row
     val enriched = unioned
       .join(
         Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
@@ -51,14 +56,19 @@ object Pipeline {
       .join(
         Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
+      .join(
+        broadcast(Tables.nation(s, dir)
+          .select(col("n_nationkey"), col("n_regionkey"), normalize_text(col("n_name")).as("nation"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(
+        broadcast(Tables.region(s, dir).select(col("r_regionkey"), normalize_text(col("r_name")).as("region"))),
+        col("n_regionkey") === col("r_regionkey"))
 
     // 3. indicator synthesis + period tagging (reference: indicator + "_" + coc)
     val tagged = enriched.select(
       date_format(col("o_orderdate"), "yyyyMM").as("period"),
-      normalize_text(col("r_name")).as("region"),
-      normalize_text(col("n_name")).as("nation"),
+      col("region"),
+      col("nation"),
       concat(col("l_returnflag"), lit("_"), col("l_linestatus")).as("indicator"),
       col("l_quantity"),
       col("l_tax"))

@@ -137,6 +137,28 @@ class PlanSpec extends SparkSpec {
     assert(aggs == 2, s"expected 1 fused aggregate (2 nodes), got $aggs:\n$p")
   }
 
+  test("pipeline e2e: names are normalized on the dimension side, never above a join") {
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.TextOps
+    // walks the physical plan through AQE wrappers and query stages
+    val walk = new AdaptiveSparkPlanHelper {}
+    val p = Pipeline.integrationReport(spark, sf).queryExecution.executedPlan
+    val normalizing = walk.collect(p) {
+      case pr: ProjectExec if pr.projectList.exists(_.exists {
+        case si: StaticInvoke => si.staticObject == TextOps.getClass && si.functionName == "normalize"
+        case _ => false
+      }) => pr
+    }
+    assert(normalizing.nonEmpty, s"no normalize projection found:\n$p")
+    normalizing.foreach { pr =>
+      assert(walk.find(pr)(_.isInstanceOf[BaseJoinExec]).isEmpty,
+        s"normalize runs above a join, once per fact row:\n$pr")
+    }
+  }
+
   test("decontaminate: bloom prefilter map-side, broadcast verify join, no sort-merge") {
     val p = plan(SparkEntry.queries("q_decontaminate")(spark, sf))
     assert(p.contains("graft_bloom_might_contain"), s"bloom prefilter missing:\n$p")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = {
     // keep catalog artifacts (warehouse, derby metastore) out of the repo
-    val scratch = java.nio.file.Files.createTempDirectory("graft-test").toString
+    val scratch = TempDirs.create("graft-test").toString
     System.setProperty("derby.system.home", scratch)
     val s = GraftSession.builder("4")
       .appName("graft-test")

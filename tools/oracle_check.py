@@ -7,6 +7,8 @@ For each <name>.parquet under verify_out_dir, runs the matching SQL from
 oracle_sql.json in DuckDB over the sf_dir tables and compares rows/schema/
 values (columns sorted by name, values rounded-stringified) — the same
 comparison shape the driver uses.
+A table may be one file (`<t>.parquet`) or a directory of part files
+(`<t>.parquet/*.parquet`, as `graft.tools.MakeSf1` writes sf1).
 
 IMPORTANT: both sides are materialized through pandas (`.df()`), matching the
 driver's dtype-sensitive path.  DuckDB HUGEINT (any un-cast integer SUM)
@@ -47,12 +49,18 @@ def frame_sig(df):
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    # bounded, so an oracle that cannot finish errors out instead of taking
+    # the machine's memory (DuckDB's default is 80% of RAM)
+    con.execute("SET memory_limit='4GB'")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        if os.path.isdir(p):  # a directory of part files (the MakeSf1 layout)
+            p = os.path.join(p, "*.parquet")
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = n_noora = 0
+    n_pass = n_fail = n_noora = n_err = 0
     for d in sorted(glob.glob(os.path.join(out_dir, "*"))):
         name = os.path.basename(d)
         if not os.path.isdir(d):
@@ -62,7 +70,12 @@ def main(sf_dir, out_dir):
             n_noora += 1
             print(f"  {name}: no oracle ({len(s_df)} rows)")
             continue
-        o_df = con.execute(oracle[name]).df()
+        try:
+            o_df = con.execute(oracle[name]).df()
+        except duckdb.Error as e:
+            n_err += 1
+            print(f"  {name}: ORACLE-ERROR  {type(e).__name__}: {str(e).splitlines()[0]}")
+            continue
         sc, sk, sr = frame_sig(s_df)
         oc, ok_kinds, orr = frame_sig(o_df)
         ok = sc == oc and sr == orr
@@ -90,8 +103,8 @@ def main(sf_dir, out_dir):
                     if a != b:
                         print(f"    first diff row {i}: spark={a} oracle={b}")
                         break
-    print(f"pass={n_pass} fail={n_fail} no_oracle={n_noora}")
-    sys.exit(1 if n_fail else 0)
+    print(f"pass={n_pass} fail={n_fail} oracle_error={n_err} no_oracle={n_noora}")
+    sys.exit(1 if n_fail or n_err else 0)
 
 
 if __name__ == "__main__":
